@@ -456,12 +456,10 @@ def main() -> None:
     from eventstream_benchmark_spark.generator.bench import (
         csv_export_rows_per_sec,
         generator_events_per_sec,
-        puredf_events_per_sec,
     )
 
     for key, probe in (
         ("generator_events_per_sec", generator_events_per_sec),
-        ("puredf_events_per_sec", puredf_events_per_sec),
         ("csv_export_rows_per_sec", csv_export_rows_per_sec),
     ):
         rates = sorted(probe(spark))

@@ -7,8 +7,6 @@ Public API (mirrors the reference surface, Spark-first):
 - :func:`patterns_df` — A5/A6 pattern set as a broadcastable DataFrame.
 - :func:`stream_df_exact` — bit-compatible single stream (golden path).
 - :func:`stream_df_sharded` — the parallel 100 TB path.
-- :func:`stream_df_pure` — fully declarative mode (closed-form laws,
-  density off): the whole generator as one Catalyst plan, no Python.
 - :func:`stream_df_cached` — A7 config-hash materialization.
 - :func:`to_numpy` / :func:`write_csv` / :func:`stream_iter` — A9-A11 export surface.
 - :mod:`compat` — drop-in ``generate_patterns`` / ``PatternSet`` /
@@ -28,7 +26,6 @@ from eventstream_benchmark_spark.generator.spark_gen import (
     patterns_df,
     stream_df_cached,
     stream_df_exact,
-    stream_df_pure,
     stream_df_sharded,
     stream_iter,
     to_numpy,
@@ -44,7 +41,6 @@ __all__ = [
     "patterns_df",
     "stream_df_cached",
     "stream_df_exact",
-    "stream_df_pure",
     "stream_df_sharded",
     "stream_iter",
     "to_numpy",

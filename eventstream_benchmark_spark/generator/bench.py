@@ -16,15 +16,8 @@ import time
 
 from pyspark.sql import SparkSession
 
-from eventstream_benchmark_spark.generator.queries import (
-    GOLDEN_PATTERNS,
-    GOLDEN_STREAM,
-    PUREDF_STREAM,
-)
-from eventstream_benchmark_spark.generator.spark_gen import (
-    stream_df_pure,
-    stream_df_sharded,
-)
+from eventstream_benchmark_spark.generator.queries import GOLDEN_PATTERNS, GOLDEN_STREAM
+from eventstream_benchmark_spark.generator.spark_gen import stream_df_sharded
 
 # Sustained-throughput scale: at 3.2M events the ~0.5 s fixed job cost
 # (task dispatch + the slowest-vCPU straggler tail) was a third of the
@@ -85,27 +78,4 @@ def csv_export_rows_per_sec(
             rates.append(round(n_rows / (time.perf_counter() - t0)))
         finally:
             shutil.rmtree(out, ignore_errors=True)
-    return rates
-
-
-def puredf_events_per_sec(
-    spark: SparkSession, n_events: int = BENCH_EVENTS
-) -> list[float]:
-    """Throughput of the fully declarative generator (round 8): the
-    same event budget as the sharded probe, but produced by one
-    Catalyst plan (broadcast schedule + expr samplers + per-shard
-    window) with zero Python workers — measures what whole-stage
-    codegen does with the generation workload vs the applyInPandas
-    NumPy path."""
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    shards = 2 * cpus
-    warm = dataclasses.replace(PUREDF_STREAM, total_events=shards * 1_000)
-    stream_df_pure(spark, GOLDEN_PATTERNS, warm, n_shards=shards).count()
-    cfg = dataclasses.replace(PUREDF_STREAM, total_events=n_events)
-    rates = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        n = stream_df_pure(spark, GOLDEN_PATTERNS, cfg, n_shards=shards).count()
-        rates.append(round(n_events / (time.perf_counter() - t0)))
-        assert n == n_events
     return rates

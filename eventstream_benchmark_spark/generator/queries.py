@@ -47,30 +47,6 @@ GOLDEN_STREAM = StreamConfig(
 SCALE_SHARDS = 32
 SCALE_STREAM = dataclasses.replace(GOLDEN_STREAM, total_events=320_000)
 
-# The pure-DataFrame mode's config: the golden stream re-based onto the
-# closed-form laws the declarative samplers support (SURVEY §4.2 —
-# poisson intervals and sin density have no closed-form column inverse):
-# uniform[3,9] noise intervals, density off, everything else golden.
-PUREDF_STREAM = dataclasses.replace(
-    SCALE_STREAM,
-    rand_interval_dist="uniform",
-    rand_interval_low=3,
-    rand_interval_high=9,
-    density_mode="none",
-)
-
-# Round 9: the closed-form jitter lane widened to gaussian (Box–Muller
-# over two keyed uniforms) and laplace (inverse CDF) — this config
-# exercises BOTH new laws in one pure-DataFrame plan: gaussian noise
-# jitter, laplace pattern jitter, everything else as PUREDF_STREAM.
-PUREDF_JITTER_STREAM = dataclasses.replace(
-    PUREDF_STREAM,
-    rand_jitter="gaussian",
-    rand_jitter_amount=2,
-    pattern_jitter="laplace",
-    pattern_jitter_amount=2,
-)
-
 
 def generate_patterns_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B33 — the pattern set as scalar rows (A5/A6).
@@ -133,65 +109,6 @@ def generate_stream_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_events"),
             bigint(F.sum(F.col("is_pattern").cast("long"))).alias("n_pattern"),
             F.max("ts").alias("span_ticks"),
-        )
-        .orderBy("shard")
-    )
-
-
-def generate_stream_dataframe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B34 (pure-DataFrame mode, SURVEY §4.2 third strategy) — the
-    generator as ONE declarative Catalyst plan: precomputed slot
-    schedule (broadcast), pattern set broadcast-joined + posexploded,
-    closed-form inverse-CDF samplers over counter-based xxhash64
-    uniforms, per-shard windowed prefix-sum clock. No applyInPandas,
-    no Python anywhere in the plan (pinned by a plan test).
-
-    Summarized per shard like ``generate_stream_sharded``, plus ts/type
-    checksums so the hash covers every generated value. Deterministic
-    (hash-keyed draws), so the oracle is the precomputed
-    ``_PUREDF_SUMMARY_ROWS`` constant, pinned against a fresh run by
-    ``tests/test_generator.py``."""
-    from eventstream_benchmark_spark.operators._util import bigint
-
-    df = spark_gen.stream_df_pure(spark, GOLDEN_PATTERNS, PUREDF_STREAM, SCALE_SHARDS)
-    return (
-        df.groupBy("shard")
-        .agg(
-            F.count("*").alias("n_events"),
-            bigint(F.sum(F.col("is_pattern").cast("long"))).alias("n_pattern"),
-            F.max("ts").alias("span_ticks"),
-            bigint(F.sum("ts")).alias("sum_ts"),
-            bigint(F.sum(F.col("event_type").cast("long"))).alias("sum_types"),
-        )
-        .orderBy("shard")
-    )
-
-
-def generate_stream_dataframe_jittered(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """B34 (pure-DataFrame mode, round-9 jitter extension) — the same
-    one-plan declarative generator as ``generate_stream_dataframe``,
-    but with the two round-9 closed-form jitter laws active: gaussian
-    noise jitter (Box–Muller of two keyed uniforms, A2's
-    ``round(randn·a)`` spelling) and laplace pattern jitter (the
-    inverse-CDF map ``round(-a·sign(u-½)·ln(1-2|u-½|))``). Same
-    per-shard checksum summary; deterministic (hash-keyed draws), so
-    the oracle is the precomputed ``_PUREDF_JITTER_SUMMARY_ROWS``
-    constant, pinned against a fresh run by ``tests/test_generator.py``."""
-    from eventstream_benchmark_spark.operators._util import bigint
-
-    df = spark_gen.stream_df_pure(
-        spark, GOLDEN_PATTERNS, PUREDF_JITTER_STREAM, SCALE_SHARDS
-    )
-    return (
-        df.groupBy("shard")
-        .agg(
-            F.count("*").alias("n_events"),
-            bigint(F.sum(F.col("is_pattern").cast("long"))).alias("n_pattern"),
-            F.max("ts").alias("span_ticks"),
-            bigint(F.sum("ts")).alias("sum_ts"),
-            bigint(F.sum(F.col("event_type").cast("long"))).alias("sum_types"),
         )
         .orderBy("shard")
     )
@@ -373,8 +290,6 @@ QUERIES = {
     "generate_patterns_spark": generate_patterns_spark,
     "generate_stream_exact": generate_stream_exact,
     "generate_stream_sharded": generate_stream_sharded,
-    "generate_stream_dataframe": generate_stream_dataframe,
-    "generate_stream_dataframe_jittered": generate_stream_dataframe_jittered,
     "udf_surface": udf_surface,
     "udtf_surface": udtf_surface,
     "cogroup_asof_enrich": cogroup_asof_enrich,
@@ -451,112 +366,7 @@ _SHARDED_SUMMARY_ROWS = (
     (30, 10000, 3000, 58324), (31, 10000, 3000, 58004),
 )
 
-# Per-shard summary of the pure-DataFrame PUREDF_STREAM (32 shards) —
-# deterministic because every draw is xxhash64-keyed by its (seed,
-# family, shard, slot, pos) coordinates; same contract as
-# _SHARDED_SUMMARY_ROWS. Pinned against a fresh Spark run by
-# tests/test_generator.py::test_puredf_summary_constants_pinned.
-_PUREDF_SUMMARY_ROWS = (
-    (0, 10000, 3000, 58507, 292747025, 24939),
-    (1, 10000, 3000, 58520, 292144687, 25188),
-    (2, 10000, 3000, 59173, 296834297, 24835),
-    (3, 10000, 3000, 58677, 293534903, 24982),
-    (4, 10000, 3000, 58474, 293354361, 24998),
-    (5, 10000, 3000, 58671, 292717268, 25029),
-    (6, 10000, 3000, 58738, 291612381, 25000),
-    (7, 10000, 3000, 58719, 294913408, 25165),
-    (8, 10000, 3000, 58870, 294409899, 25042),
-    (9, 10000, 3000, 58690, 293640581, 24975),
-    (10, 10000, 3000, 58658, 294147292, 25090),
-    (11, 10000, 3000, 58733, 293354011, 25211),
-    (12, 10000, 3000, 58987, 294445975, 24944),
-    (13, 10000, 3000, 58614, 292319300, 25412),
-    (14, 10000, 3000, 58480, 293074492, 25248),
-    (15, 10000, 3000, 58739, 293308531, 25296),
-    (16, 10000, 3000, 58626, 293036256, 25129),
-    (17, 10000, 3000, 58540, 293159337, 24770),
-    (18, 10000, 3000, 58315, 291627645, 25259),
-    (19, 10000, 3000, 58476, 291504572, 25069),
-    (20, 10000, 3000, 58686, 293884643, 25076),
-    (21, 10000, 3000, 58535, 292081871, 25203),
-    (22, 10000, 3000, 58575, 292671364, 25052),
-    (23, 10000, 3000, 58494, 293112247, 25414),
-    (24, 10000, 3000, 58809, 294426850, 25277),
-    (25, 10000, 3000, 58789, 293675926, 25061),
-    (26, 10000, 3000, 58609, 293008250, 25221),
-    (27, 10000, 3000, 58533, 292352980, 25095),
-    (28, 10000, 3000, 58347, 291347249, 25130),
-    (29, 10000, 3000, 58681, 293440784, 25149),
-    (30, 10000, 3000, 58909, 293939832, 24870),
-    (31, 10000, 3000, 58298, 290877253, 25155),
-)
-
-# Per-shard summary of PUREDF_JITTER_STREAM (round 9: gaussian noise
-# jitter + laplace pattern jitter through the closed-form column
-# samplers) — precomputed the same way as _PUREDF_SUMMARY_ROWS and
-# pinned against a fresh Spark run by tests/test_generator.py.
-_PUREDF_JITTER_SUMMARY_ROWS = (
-    (0, 10000, 3000, 58847, 294831212, 24939),
-    (1, 10000, 3000, 59140, 295045646, 25188),
-    (2, 10000, 3000, 59809, 299929794, 24835),
-    (3, 10000, 3000, 59097, 296305219, 24982),
-    (4, 10000, 3000, 59257, 297131505, 24998),
-    (5, 10000, 3000, 59170, 295112319, 25029),
-    (6, 10000, 3000, 59381, 296445377, 25000),
-    (7, 10000, 3000, 59467, 298983985, 25165),
-    (8, 10000, 3000, 59408, 297035659, 25042),
-    (9, 10000, 3000, 59566, 297537653, 24975),
-    (10, 10000, 3000, 59203, 297435647, 25090),
-    (11, 10000, 3000, 59320, 297099492, 25211),
-    (12, 10000, 3000, 59411, 296638361, 24944),
-    (13, 10000, 3000, 59204, 296010836, 25412),
-    (14, 10000, 3000, 58776, 295612007, 25248),
-    (15, 10000, 3000, 59270, 296342178, 25296),
-    (16, 10000, 3000, 59463, 297484425, 25129),
-    (17, 10000, 3000, 59154, 295755038, 24770),
-    (18, 10000, 3000, 58920, 293997997, 25259),
-    (19, 10000, 3000, 58883, 293363956, 25069),
-    (20, 10000, 3000, 59253, 296312814, 25076),
-    (21, 10000, 3000, 59222, 295759131, 25203),
-    (22, 10000, 3000, 59010, 295408523, 25052),
-    (23, 10000, 3000, 59151, 297555504, 25414),
-    (24, 10000, 3000, 59175, 296366110, 25277),
-    (25, 10000, 3000, 59052, 294321072, 25061),
-    (26, 10000, 3000, 59376, 297376601, 25221),
-    (27, 10000, 3000, 58969, 294156080, 25095),
-    (28, 10000, 3000, 58971, 294893780, 25130),
-    (29, 10000, 3000, 59203, 295771674, 25149),
-    (30, 10000, 3000, 59492, 296450782, 24870),
-    (31, 10000, 3000, 58899, 293634919, 25155),
-)
-
 ORACLES: dict[str, str] = {
-    "generate_stream_dataframe": (
-        "SELECT CAST(c0 AS INTEGER) AS shard,"
-        " CAST(c1 AS BIGINT) AS n_events,"
-        " CAST(c2 AS BIGINT) AS n_pattern,"
-        " CAST(c3 AS BIGINT) AS span_ticks,"
-        " CAST(c4 AS BIGINT) AS sum_ts,"
-        " CAST(c5 AS BIGINT) AS sum_types FROM (VALUES "
-        + ", ".join(
-            f"({s}, {n}, {p}, {sp}, {st}, {ty})"
-            for s, n, p, sp, st, ty in _PUREDF_SUMMARY_ROWS
-        )
-        + ") v(c0, c1, c2, c3, c4, c5) ORDER BY shard"
-    ),
-    "generate_stream_dataframe_jittered": (
-        "SELECT CAST(c0 AS INTEGER) AS shard,"
-        " CAST(c1 AS BIGINT) AS n_events,"
-        " CAST(c2 AS BIGINT) AS n_pattern,"
-        " CAST(c3 AS BIGINT) AS span_ticks,"
-        " CAST(c4 AS BIGINT) AS sum_ts,"
-        " CAST(c5 AS BIGINT) AS sum_types FROM (VALUES "
-        + ", ".join(
-            f"({s}, {n}, {p}, {sp}, {st}, {ty})"
-            for s, n, p, sp, st, ty in _PUREDF_JITTER_SUMMARY_ROWS
-        )
-        + ") v(c0, c1, c2, c3, c4, c5) ORDER BY shard"
-    ),
     "pattern_recovery_scored": (
         "SELECT CAST({} AS BIGINT) AS n_matches,"
         " CAST({} AS BIGINT) AS n_true_matches,"

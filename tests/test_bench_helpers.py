@@ -96,14 +96,3 @@ def test_money_cents_always_integer_cast_in_oracles():
                 f"{name}: round(value*100) missing its CAST( wrapper"
             )
 
-
-def test_rotation_changed_tier_orders_after_never_sampled():
-    """_CHANGED_THIS_ROUND names sort after never-sampled additions and
-    before every staleness tier, regardless of how recent their last
-    green row is."""
-    from eventstream_benchmark_spark.rotation import staleness_order
-
-    names = ["a_new", "b_changed_recent", "c_stale", "d_changed_old", "e_fresh"]
-    latest = {"b_changed_recent": 8, "c_stale": 2, "d_changed_old": 3, "e_fresh": 8}
-    got = staleness_order(names, latest, changed=("b_changed_recent", "d_changed_old"))
-    assert got == ["a_new", "b_changed_recent", "d_changed_old", "c_stale", "e_fresh"]

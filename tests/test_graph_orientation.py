@@ -45,16 +45,16 @@ def test_triangle_plus_pendant(spark):
 
 
 def test_closing_join_broadcasts_below_cap_only(spark):
-    """The closing-edge check must never force the wedge stream
-    through an exchange when the edge set fits an executor: at
-    TRIANGLE_BROADCAST_CAP the closing side plans as a broadcast hash
-    join; one edge above (where the hashed relation outgrows ordinary
-    executor memory) the switch falls back to the shuffled join, and
-    an unknown count (None) takes the safe unhinted plan. The probes
-    straddle the actual constant so raising the cap cannot silently
-    untest the fallback, and the assertion is DIFFERENTIAL — the two
-    plans differ only in the closing-join hint, so below-cap must
-    carry strictly more broadcast joins than above-cap."""
+    """The two adjacency (neighbor-array) joins must never force the
+    oriented edge stream through an exchange when the edge set fits an
+    executor: at TRIANGLE_BROADCAST_CAP both plan as broadcast hash
+    joins; one edge above (where the hashed relation outgrows ordinary
+    executor memory) they fall back to shuffled joins, and an unknown
+    count (None) takes the safe unhinted plan. The probes straddle the
+    actual constant so raising the cap cannot silently untest the
+    fallback, and the assertion is DIFFERENTIAL — the two plans differ
+    only in the adjacency-join hints, so below-cap must carry strictly
+    more broadcast joins than above-cap."""
     from eventstream_benchmark_spark.operators.graph import TRIANGLE_BROADCAST_CAP
 
     e = spark.createDataFrame(
@@ -70,7 +70,7 @@ def test_closing_join_broadcasts_below_cap_only(spark):
     above = plan(TRIANGLE_BROADCAST_CAP + 1)
     unknown = plan(None)
     assert below.count("BroadcastHashJoin") > above.count("BroadcastHashJoin")
-    # above-cap / unknown: the closing join keeps a shuffled spelling
+    # above-cap / unknown: the adjacency joins keep a shuffled spelling
     assert ("SortMergeJoin" in above) or ("ShuffledHashJoin" in above)
     assert unknown.count("BroadcastHashJoin") == above.count("BroadcastHashJoin")
     # both strategies agree on the count (K6 has C(6,3) triangles)

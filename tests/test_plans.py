@@ -138,30 +138,6 @@ def test_text_ops_are_single_scan_no_python(spark, sf_small, name):
         assert node not in plan, f"{name}: unexpected {node}"
 
 
-def test_puredf_generator_no_python_no_global_window(spark, sf_small):
-    """SURVEY §4.2 pure-DataFrame mode: the whole generator is one
-    Catalyst plan — zero Python execution nodes (the mode's entire
-    point), pattern set and slot schedule arrive by broadcast, and the
-    prefix-sum clock windows per shard (never a single global
-    partition). Same pins for the round-9 jittered variant — the
-    Box–Muller / inverse-CDF jitters must stay pure column exprs."""
-    for name in ("generate_stream_dataframe", "generate_stream_dataframe_jittered"):
-        plan = _plan(spark, sf_small, name)
-        for node in (
-            "BatchEvalPython",
-            "ArrowEvalPython",
-            "MapInPandas",
-            "FlatMapGroupsInPandas",
-        ):
-            assert node not in plan, f"{name}: unexpected Python node {node}"
-        assert "BroadcastHashJoin" in plan  # schedule + pattern-set joins
-        assert "SortMergeJoin" not in plan
-        assert "CartesianProduct" not in plan
-        # the clock window is keyed by shard, not a global order
-        assert "Window" in plan
-        assert "SinglePartition" not in plan
-
-
 def test_q5_cyclic_star_join_broadcasts(spark, sf_small):
     plan = _plan(spark, sf_small, "sql_tpch_q5")
     # the c_nationkey = s_nationkey cycle must not degrade the join graph

@@ -10,8 +10,7 @@
 - ``events_weekday_contrast`` must survive a zero-weekend regime: the
   display ratio goes NULL (both engines), never ±Infinity.
 - COVERAGE.md must track the registry: every ``all_queries()`` name
-  appears in the doc (the `_FRONT_OF_REGISTRY` assert covers renames in
-  code; this covers doc drift).
+  appears in the doc (this covers doc drift).
 """
 
 from __future__ import annotations

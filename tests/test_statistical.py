@@ -155,58 +155,7 @@ def test_exact_and_fast_agree_distributionally():
     assert tvd < 0.05, f"gap TVD {tvd:.3f}"
 
 
-# ---------------------------------------------------------------------------
-# pure-DataFrame mode (round 8): the counter-based xxhash64 samplers
-# must reproduce the same LAWS the NumPy paths draw from — the §4.2
-# distributional-fidelity contract, shared with the sharded mode.
-# ---------------------------------------------------------------------------
-
-
-def _pure_arrays(spark, cfg: StreamConfig, n_shards: int = 8):
-    from eventstream_benchmark_spark.generator import stream_df_pure
-
-    pdf = (
-        stream_df_pure(spark, PCFG, cfg, n_shards=n_shards)
-        .toPandas()
-        .sort_values(["shard", "event_id"])
-    )
-    return pdf
-
-
-def _per_shard_gaps(pdf) -> np.ndarray:
-    return np.concatenate(
-        [np.diff(grp["ts"].to_numpy()) for _, grp in pdf.groupby("shard")]
-    )
-
-
-def test_puredf_type_marginals_uniform(spark):
-    """Pure-mode noise types ~ U[0, 6): chi-square, df=5 (crit 20.5 at
-    p=0.001; 30 with slack) — the hash-keyed `floor(u·n)` sampler must
-    be as uniform as the NumPy `integers` draw it replaces."""
-    cfg = StreamConfig(n_types=6, total_events=120_000, random_ratio=1.0,
-                       rand_interval_dist="fixed", rand_interval_base=3,
-                       rand_jitter="none", density_mode="none")
-    pdf = _pure_arrays(spark, cfg)
-    counts = np.bincount(pdf["event_type"].to_numpy(), minlength=6)
-    expected = cfg.total_events / 6
-    chi2 = float(((counts - expected) ** 2 / expected).sum())
-    assert chi2 < 30, f"chi2={chi2:.1f}, counts={counts}"
-
-
-def test_puredf_geometric_interarrival_ks(spark):
-    """Pure-mode geometric(p=1/5) intervals via the inverse-CDF column
-    expr: KS distance vs 1-(1-p)^k under the same 0.01 bound the NumPy
-    fast path meets."""
-    cfg = StreamConfig(n_types=4, total_events=200_000, random_ratio=1.0,
-                       rand_interval_dist="geometric", rand_interval_base=5,
-                       rand_jitter="none", density_mode="none")
-    gaps = _per_shard_gaps(_pure_arrays(spark, cfg))
-    p = 1.0 / 5.0
-    d = _ks_distance(gaps, lambda k: 1.0 - (1.0 - p) ** k)
-    assert d < 0.01, f"KS distance {d:.4f}"
-
-
-def test_puredf_uniform_interval_with_jitter_law(spark):
+def test_uniform_interval_with_jitter_law():
     """Uniform[3,9] intervals + uniform ±1 jitter = the triangular-
     tailed convolution on [2,10] (clamped ≥1 — never binding here):
     exact discrete law, chi-square with df=8 (crit 26.1 at p=0.001;
@@ -215,7 +164,8 @@ def test_puredf_uniform_interval_with_jitter_law(spark):
                        rand_interval_dist="uniform", rand_interval_low=3,
                        rand_interval_high=9, rand_jitter="uniform",
                        rand_jitter_amount=1, density_mode="none")
-    gaps = _per_shard_gaps(_pure_arrays(spark, cfg))
+    ts, _, _ = _fast(cfg)
+    gaps = np.diff(ts)
     # P(gap=g) = sum_{d in -1..1} P(base=g-d)/3, base ~ U{3..9}
     law = {}
     for b in range(3, 10):
@@ -229,27 +179,25 @@ def test_puredf_uniform_interval_with_jitter_law(spark):
     assert chi2 < 40, f"chi2={chi2:.1f}"
 
 
-def test_puredf_gaussian_jitter_ks(spark):
-    """Round-9 closed-form lane: gaussian jitter via Box–Muller over
-    two keyed uniforms. gap = max(1, 10 + round(z·3)), z ~ N(0,1), so
-    CDF(g) = Φ((g - 10 + ½)/3) (the ≥1 clamp folds the lower tail into
-    g=1, which the same formula already measures). KS < 0.01 at n=200k
-    — the bound every other law test uses."""
+def test_gaussian_jitter_ks():
+    """gap = max(1, 10 + round(z·3)), z ~ N(0,1), so CDF(g) =
+    Φ((g - 10 + ½)/3) (the ≥1 clamp folds the lower tail into g=1,
+    which the same formula already measures). KS < 0.01 at n=200k —
+    the bound every other law test uses."""
     from math import erf, sqrt
 
     cfg = StreamConfig(n_types=4, total_events=200_000, random_ratio=1.0,
                        rand_interval_dist="fixed", rand_interval_base=10,
                        rand_jitter="gaussian", rand_jitter_amount=3,
                        density_mode="none")
-    gaps = _per_shard_gaps(_pure_arrays(spark, cfg))
+    ts, _, _ = _fast(cfg)
     phi = lambda x: 0.5 * (1.0 + erf(x / sqrt(2.0)))  # noqa: E731
-    d = _ks_distance(gaps, lambda g: phi((g - 10 + 0.5) / 3.0))
+    d = _ks_distance(np.diff(ts), lambda g: phi((g - 10 + 0.5) / 3.0))
     assert d < 0.01, f"KS distance {d:.4f}"
 
 
-def test_puredf_laplace_jitter_ks(spark):
-    """Round-9 closed-form lane: laplace jitter via its inverse CDF.
-    gap = max(1, 10 + round(L)), L ~ Laplace(0, 3): CDF(g) =
+def test_laplace_jitter_ks():
+    """gap = max(1, 10 + round(L)), L ~ Laplace(0, 3): CDF(g) =
     F_L(g - 10 + ½) with F_L(x) = ½eˣ̷ᵇ below 0 and 1 - ½e⁻ˣ̷ᵇ above."""
     from math import exp
 
@@ -258,43 +206,11 @@ def test_puredf_laplace_jitter_ks(spark):
                        rand_interval_dist="fixed", rand_interval_base=10,
                        rand_jitter="laplace", rand_jitter_amount=3,
                        density_mode="none")
-    gaps = _per_shard_gaps(_pure_arrays(spark, cfg))
+    ts, _, _ = _fast(cfg)
 
     def lap_cdf(g: int) -> float:
         x = g - 10 + 0.5
         return 0.5 * exp(x / b) if x < 0 else 1.0 - 0.5 * exp(-x / b)
 
-    d = _ks_distance(gaps, lap_cdf)
+    d = _ks_distance(np.diff(ts), lap_cdf)
     assert d < 0.01, f"KS distance {d:.4f}"
-
-
-def test_puredf_and_fast_agree_distributionally(spark):
-    """Pure-DataFrame and NumPy-fast paths at the same closed-form
-    config: identical slot schedule (same achieved ratio per shard),
-    spans within 2%, gap histograms close (TVD < 0.05) — the same
-    agreement bar the exact/fast pair meets."""
-    import dataclasses
-
-    cfg = StreamConfig(n_types=6, total_events=60_000, random_ratio=0.7,
-                       pattern_jitter="uniform", pattern_jitter_amount=2,
-                       rand_interval_dist="uniform", rand_interval_low=3,
-                       rand_interval_high=9,
-                       rand_jitter="uniform", rand_jitter_amount=1,
-                       density_mode="none")
-    pdf = _pure_arrays(spark, cfg, n_shards=4)
-    types, gaps = core.build_patterns(PCFG)
-    shard_cfg = dataclasses.replace(cfg, total_events=cfg.total_events // 4)
-    ts_f, ty_f, lb_f = core.build_stream_fast(
-        shard_cfg, types, gaps, rng=core.make_rng(11)
-    )
-    one = pdf[pdf["shard"] == 0]
-    # same deterministic schedule -> identical label sequence
-    assert np.array_equal(one["is_pattern"].to_numpy(), lb_f)
-    span_p, span_f = int(one["ts"].iloc[-1]), int(ts_f[-1])
-    assert abs(span_p - span_f) / span_f < 0.02, (span_p, span_f)
-    gp, gf = np.diff(one["ts"].to_numpy()), np.diff(ts_f)
-    hi = int(max(gp.max(), gf.max()))
-    hp = np.bincount(gp, minlength=hi + 1) / gp.size
-    hf = np.bincount(gf, minlength=hi + 1) / gf.size
-    tvd = 0.5 * np.abs(hp - hf).sum()
-    assert tvd < 0.05, f"gap TVD {tvd:.3f}"
