@@ -1,11 +1,11 @@
 """Generator throughput probe used by /root/repo/bench.py.
 
 Measures the sharded scale path (B34) end-to-end: driver pattern
-build → 32 applyInPandas tasks each running the sequential NumPy
-recurrence → full materialization via count. Baseline context: the
-reference generates ~98k ev/s single-threaded at the same canonical
-config (BASELINE.md); the sharded path should scale roughly linearly
-with cores.
+build → one mapInPandas task per core, each running the sequential
+NumPy recurrence for a contiguous block of the 32 shards → full
+materialization via count. Baseline context: the reference generates
+~98k ev/s single-threaded at the same canonical config (BASELINE.md);
+the sharded path should scale roughly linearly with cores.
 """
 
 from __future__ import annotations

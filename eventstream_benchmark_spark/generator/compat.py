@@ -81,7 +81,7 @@ class EventStream:
     18 parameters with the reference's defaults, plus three
     engine-side keywords: ``spark`` (attach a session for DataFrame /
     cache / CSV surfaces), ``mode`` ("exact" = bit-parity driver
-    NumPy; "sharded" = parallel applyInPandas scale path), and
+    NumPy; "sharded" = parallel mapInPandas scale path), and
     ``n_shards`` (sharded mode width)."""
 
     def __init__(
@@ -219,8 +219,8 @@ class EventStream:
         is_pattern``, ``%d`` values, ONE file at ``path``
         (``eventstream.py:417-427``). Exact mode writes driver-side
         (bit-parity with the reference file, Spark or not); sharded
-        mode writes through the Spark sink and moves the coalesced
-        part file to ``path`` — either way the caller gets the single
+        mode writes through the Spark sink and moves its one part
+        file to ``path`` — either way the caller gets the single
         file the reference API contract promises, never a Spark output
         directory (round-4 advice)."""
         if self._mode == "sharded":

@@ -92,11 +92,11 @@ def generate_stream_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def generate_stream_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B34 (scale mode) — 8× the golden config across 32 parallel
-    applyInPandas shards; per-shard invariant summary (event count,
-    integer pattern-event count, time span) so the driver sees one row
-    per shard. Hash-checked against the precomputed
-    ``_SHARDED_SUMMARY_ROWS`` constant. The pattern share is pinned as
+    """B34 (scale mode) — 8× the golden config across 32 shards,
+    generated by one mapInPandas task per core; per-shard invariant
+    summary (event count, integer pattern-event count, time span) so
+    the driver sees one row per shard. Hash-checked against the
+    precomputed ``_SHARDED_SUMMARY_ROWS`` constant. The pattern share is pinned as
     the raw integer count (not a rounded fraction) so the constant
     can't drift on a rounding-mode mismatch between engines (Spark
     HALF_UP vs Python banker's rounding at .0005 ties)."""
@@ -119,7 +119,7 @@ def udf_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     in one query over the events fixture: a scalar UDF (row-at-a-time,
     the deliberately-slow path kept off hot loops), an Arrow-batched
     pandas UDF (the A3 Poisson sampler shape), and a grouped-map
-    applyInPandas (per-type summary, the B34 shard shape)."""
+    applyInPandas (per-type summary)."""
     import numpy as np
 
     from eventstream_benchmark_spark.io import load_table

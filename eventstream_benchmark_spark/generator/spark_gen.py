@@ -6,14 +6,16 @@ Three generation paths, one schema:
   reference, wrapped in ``createDataFrame``. The golden-test path;
   right whenever one logical stream must match the reference
   draw-for-draw (reference ``eventstream.py:288-409``).
-- **sharded** — the 100 TB path: S independent sub-streams, each
-  generated sequentially inside one ``applyInPandas`` task with a
-  SeedSequence-spawned RNG. Embarrassingly parallel (the only shuffle
-  is the `spark.range(S)` groupBy, S rows); per-shard throughput is
-  the reference's single-core rate, so total rate scales with cores.
-  Shard streams preserve every distributional invariant (ratio,
-  interval laws, contiguous patterns, density profile) but are not
-  the reference's single global sequence — SURVEY §4.2.
+- **sharded** — the 100 TB path: S independent sub-streams with
+  SeedSequence-spawned RNGs, generated by one ``mapInPandas`` task per
+  core (``min(S, defaultParallelism)`` tasks). Each task walks a
+  contiguous block of shard ids in ascending order and generates each
+  shard sequentially, so every event is generated once, by one Python
+  task, with no shuffle. Per-shard throughput is the reference's
+  single-core rate, so total rate scales with cores. Shard streams
+  preserve every distributional invariant (ratio, interval laws,
+  contiguous patterns, density profile) but are not the reference's
+  single global sequence — SURVEY §4.2.
 - **cached** — either path materialized to parquet keyed by
   md5(config) — the reference's pickle-cache semantics
   (``eventstream.py:249-284``) re-expressed as a warehouse table.
@@ -21,7 +23,9 @@ Three generation paths, one schema:
 Export surface mirrors A9-A11: ``to_numpy`` ([N,3] int array, bool
 upcast — ``eventstream.py:413-415``), ``write_csv`` (header
 ``timestamp,event_type,is_pattern``, ints — ``:417-427``),
-``stream_iter`` (ordered row generator — ``:429-432``).
+``stream_iter`` (ordered row generator — ``:429-432``). All three read
+the stream in ``(shard, event_id)`` order through one single-partition
+sort (:func:`_in_stream_order`), which runs the generator once.
 """
 
 from __future__ import annotations
@@ -111,13 +115,21 @@ def stream_df_sharded(
     pattern_arrays: tuple[np.ndarray, np.ndarray] | None = None,
 ) -> DataFrame:
     """Scale-mode stream: ``n_shards`` independent sub-streams, each a
-    sequential NumPy generation inside one ``applyInPandas`` task.
+    sequential NumPy generation, laid out as one ``mapInPandas`` task
+    per core.
+
+    ``spark.range`` splits the shard ids into
+    ``min(n_shards, defaultParallelism)`` contiguous ascending blocks;
+    each task generates its block's shards one after another and yields
+    one frame per non-empty shard. There is no exchange, and each task
+    pays the Python worker start-up once, not once per shard.
 
     Pattern matrices are built once on the driver and shipped in the
     task closure (tiny). Each shard gets a SeedSequence-spawned RNG —
     deterministic, non-overlapping — and its own event-id range
     ``[shard * ceil(N/S), ...)`` so (shard, event_id) is a total order
-    aligned with each shard's timeline.
+    aligned with each shard's timeline. The rows depend only on the
+    config and ``n_shards``, not on the task layout.
     """
     if pattern_arrays is not None:
         types, gaps = pattern_arrays  # compat facade: user-supplied PatternSet
@@ -127,24 +139,21 @@ def stream_df_sharded(
     stride = -(-scfg.total_events // n_shards)  # ceil
     cfg = scfg
 
-    def gen_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(pdf["shard"].iloc[0])
-        n_events = sizes[shard]
-        if n_events == 0:
-            return _arrays_to_pdf(
-                np.empty(0, np.int64), np.empty(0, np.int32), np.empty(0, bool), shard, 0
-            )
-        shard_cfg = dataclasses.replace(cfg, total_events=n_events)
-        rng = core.shard_rng(cfg.seed, shard)
-        # fast path: same laws/schedule/clamps, batched draws (§4.2
-        # scale-mode fidelity is distributional, not draw-for-draw)
-        ts, ty, label = core.build_stream_fast(shard_cfg, types, gaps, rng=rng)
-        return _arrays_to_pdf(ts, ty, label, shard, id_offset=shard * stride)
+    def gen_block(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for batch in batches:
+            for shard in batch["id"].tolist():
+                n_events = sizes[shard]
+                if n_events == 0:
+                    continue
+                shard_cfg = dataclasses.replace(cfg, total_events=n_events)
+                rng = core.shard_rng(cfg.seed, shard)
+                # fast path: same laws/schedule/clamps, batched draws (§4.2
+                # scale-mode fidelity is distributional, not draw-for-draw)
+                ts, ty, label = core.build_stream_fast(shard_cfg, types, gaps, rng=rng)
+                yield _arrays_to_pdf(ts, ty, label, shard, id_offset=shard * stride)
 
-    shards = spark.range(n_shards).select(F.col("id").cast("int").alias("shard"))
-    return shards.repartition(n_shards, "shard").groupBy("shard").applyInPandas(
-        gen_one, STREAM_SCHEMA
-    )
+    n_tasks = min(n_shards, spark.sparkContext.defaultParallelism)
+    return spark.range(0, n_shards, 1, n_tasks).mapInPandas(gen_block, STREAM_SCHEMA)
 
 
 def stream_df_cached(
@@ -176,14 +185,23 @@ def stream_df_cached(
     return spark.read.parquet(path)
 
 
+def _in_stream_order(df: DataFrame) -> DataFrame:
+    """``df`` as one partition sorted by ``(shard, event_id)``: the
+    stream order every export reads. A single-partition exchange plus a
+    local sort, so the generator runs once (a global ``orderBy`` would
+    first sample the stream's range boundaries, running it twice)."""
+    return df.repartition(1).sortWithinPartitions("shard", "event_id")
+
+
 def to_numpy(df: DataFrame) -> np.ndarray:
     """A9's ``[N, 3]`` int array (reference ``eventstream.py:413-415``):
     columns ``(timestamp, event_type, is_pattern)`` in stream order,
     the bool label upcast to int exactly as ``np.stack`` does in the
     reference. Driver-side materialization — test/demo scale only, like
-    the reference's own ``to_numpy``."""
+    the reference's own ``to_numpy``; the ordering sort runs in one
+    task."""
     pdf = (
-        df.orderBy("shard", "event_id")
+        _in_stream_order(df)
         .select("ts", "event_type", F.col("is_pattern").cast("long"))
         .toPandas()
     )
@@ -192,18 +210,18 @@ def to_numpy(df: DataFrame) -> np.ndarray:
 
 def write_csv(df: DataFrame, path: str) -> None:
     """CSV sink with the reference's header and %d value formatting
-    (``eventstream.py:417-427``): one ordered file, bool as 0/1.
+    (``eventstream.py:417-427``): one ordered file, bool as 0/1,
+    written by the single task that sorts the stream.
     Writes a Spark output DIRECTORY at ``path`` (part file +
     ``_SUCCESS``); ``write_csv_file`` below delivers the reference's
     single-file contract."""
     (
-        df.orderBy("shard", "event_id")
+        _in_stream_order(df)
         .select(
             F.col("ts").alias("timestamp"),
             F.col("event_type"),
             F.col("is_pattern").cast("int").alias("is_pattern"),
         )
-        .coalesce(1)
         .write.mode("overwrite")
         .option("header", True)
         .csv(path)
@@ -212,8 +230,8 @@ def write_csv(df: DataFrame, path: str) -> None:
 
 def write_csv_file(df: DataFrame, path: str) -> None:
     """The reference's single-CSV-file semantics on top of the Spark
-    sink: write the coalesced directory next to ``path``, then move
-    the one part file INTO ``path`` — so a drop-in caller gets exactly
+    sink: write the one-partition directory next to ``path``, then move
+    its one part file INTO ``path`` — so a drop-in caller gets exactly
     the file the reference API would have written."""
     import glob
     import shutil
@@ -227,7 +245,12 @@ def write_csv_file(df: DataFrame, path: str) -> None:
 
 def stream_iter(df: DataFrame) -> Iterator[tuple[int, int, bool]]:
     """A11's pull-based one-event-at-a-time iterator
-    (``eventstream.py:429-432``): ordered ``toLocalIterator`` so the
-    consumer loop (``main.py:44-46``) works unchanged against Spark."""
-    for row in df.orderBy("shard", "event_id").select("ts", "event_type", "is_pattern").toLocalIterator():
+    (``eventstream.py:429-432``) so the consumer loop
+    (``main.py:44-46``) works unchanged against Spark. The stream is
+    sorted in one partition, which ``toLocalIterator`` then fetches
+    whole: like the reference, which builds the full arrays before its
+    ``stream()`` yields the first event, the whole stream is held in
+    memory (here in the one executor task, then the driver)."""
+    rows = _in_stream_order(df).select("ts", "event_type", "is_pattern").toLocalIterator()
+    for row in rows:
         yield int(row.ts), int(row.event_type), bool(row.is_pattern)

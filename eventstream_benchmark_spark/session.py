@@ -1,8 +1,9 @@
 """SparkSession builder tuned for this engine.
 
-Local mode is a 32-thread single JVM; at cluster scale the same config
-keys apply (AQE handles runtime re-planning, UTC pins oracle parity,
-Arrow accelerates the few pandas-UDF paths).
+Local mode is one JVM, ``local[SPARK_GRAFT_CPUS]`` (all cores by
+default); at cluster scale the same config keys apply (AQE handles
+runtime re-planning, UTC pins oracle parity, Arrow accelerates the few
+pandas-UDF paths).
 """
 
 from __future__ import annotations

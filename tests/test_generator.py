@@ -35,6 +35,7 @@ from eventstream_benchmark_spark.generator import (
     to_numpy,
     write_csv,
 )
+from eventstream_benchmark_spark.generator.spark_gen import STREAM_SCHEMA, _in_stream_order
 
 PCFG = PatternConfig(n_patterns=8, pattern_length=10, n_types=6,
                      gap_dist="uniform", gap_low=3, gap_high=9, seed=137)
@@ -247,6 +248,72 @@ def test_sharded_stream_invariants(spark):
     s0 = pdf[pdf["shard"] == 0]["ts"].to_numpy()
     s1 = pdf[pdf["shard"] == 1]["ts"].to_numpy()
     assert not np.array_equal(s0[: min(len(s0), len(s1))], s1[: min(len(s0), len(s1))])
+
+
+def _executed_plan(df) -> str:
+    """The plan ``df`` actually ran: collect first, then read the same
+    query execution (the final plan, when adaptive execution wraps it)."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return plan.toString()
+
+
+@pytest.mark.parametrize("n_shards", [1, 3, 8, 32])
+def test_sharded_layout_one_block_per_core(spark, n_shards):
+    """One Python task per core, each generating a contiguous ascending
+    block of shard ids, and no shuffle: every event is generated once,
+    by the task that emits it."""
+    scfg = dataclasses.replace(SCFG, total_events=40 * n_shards)
+    df = stream_df_sharded(spark, PCFG, scfg, n_shards=n_shards)
+    plan = _executed_plan(df)
+    assert plan.count("MapInPandas") == 1
+    assert "Exchange" not in plan
+    n_tasks = min(n_shards, spark.sparkContext.defaultParallelism)
+    parts = df.select("shard").rdd.glom().map(lambda rows: [r.shard for r in rows]).collect()
+    assert len(parts) == n_tasks
+    assert all(rows and rows == sorted(rows) for rows in parts)
+    blocks = [list(dict.fromkeys(rows)) for rows in parts]
+    assert [s for block in blocks for s in block] == list(range(n_shards))
+
+
+def test_sharded_fewer_events_than_shards(spark):
+    """N < n_shards: the empty shards emit nothing, the rest one event
+    each at their own event-id offset, in the unchanged schema."""
+    scfg = dataclasses.replace(SCFG, total_events=5)
+    df = stream_df_sharded(spark, PCFG, scfg, n_shards=8)
+    assert df.schema == STREAM_SCHEMA
+    rows = sorted((r.shard, r.event_id) for r in df.collect())
+    assert rows == [(s, s) for s in range(5)]
+
+
+def test_exports_sort_in_one_partition(spark):
+    """The export order is one single-partition exchange plus a local
+    sort: no range-partitioning sampler, which would run the Python
+    generator a second time."""
+    scfg = dataclasses.replace(SCFG, total_events=4_000)
+    df = _in_stream_order(stream_df_sharded(spark, PCFG, scfg, n_shards=8))
+    plan = _executed_plan(df)
+    assert "rangepartitioning" not in plan
+    exchanges = [line for line in plan.splitlines() if "Exchange" in line]
+    assert len(exchanges) == 1 and "SinglePartition" in exchanges[0]
+    assert plan.count("MapInPandas") == 1
+
+
+def test_type_draw_integers_equals_choice():
+    """core.build_stream draws the noise type with ``integers(0, n)``
+    where the reference calls ``choice(n)``: the two give the same
+    values and leave the bit generator in the same state, also when
+    interleaved with the interval and jitter draws around them."""
+    for seed in range(5):
+        for n in (2, 6, 1000):
+            ref, ours = core.make_rng(seed), core.make_rng(seed)
+            for _ in range(2_000):
+                assert ref.poisson(6.0) == ours.poisson(6.0)
+                assert ref.integers(-1, 2) == ours.integers(-1, 2)
+                assert int(ref.choice(n)) == int(ours.integers(0, n))
+            assert ref.bit_generator.state == ours.bit_generator.state
 
 
 def test_patterns_df_matches_numpy(spark):
